@@ -520,12 +520,12 @@ object BenchScale {
       // build times must measure a BUILD, not a memo/pointer hit from
       // an earlier bench run against the same corpus fingerprint
       val tKey = operators.TextIndex.corpusKey(dir)
-      operators.TextIndex.evictMemo(tKey)
+      operators.TextIndex.lifecycle.evictMemo(tKey)
       operators.ArtifactGen.wipe(operators.TextIndex.rootFor(tKey))
       val aKey = operators.AnnIndex.corpusKey(dir)
-      operators.AnnIndex.evictMemo(aKey)
+      operators.AnnIndex.lifecycle.evictMemo(aKey)
       operators.ArtifactGen.wipe(operators.AnnIndex.rootFor(aKey))
-      operators.DedupIndex.evictMemo("even-" + tKey)
+      operators.DedupIndex.lifecycle.evictMemo("even-" + tKey)
       operators.ArtifactGen.wipe(operators.DedupIndex.rootFor("even-" + tKey))
       // SPARK_GRAFT_BUILDS narrows which artifact builds are timed
       // (comma-separated names) — a focused re-probe of one build

@@ -570,7 +570,7 @@ private[graft] object QueriesScanSink {
       // on gen-2 — wholly-old or wholly-new, never mixed.
       val key = "s15-" + TextIndex.corpusKey(d)
       val root = TextIndex.rootFor(key)
-      TextIndex.evictMemo(key)
+      TextIndex.lifecycle.evictMemo(key)
       ArtifactGen.wipe(root)
       // the lifecycle semantics (fresh generations, pointer swap,
       // stale-reader isolation, gc) are corpus-size-independent — the
@@ -579,9 +579,9 @@ private[graft] object QueriesScanSink {
       // scaling itself is BenchScale's job
       val docs = Tables.documents(s, d).filter(col("doc_id") < 2000)
       val a = TextIndex.ensure(docs.filter(col("doc_id") % 2 === 0), key)
-      TextIndex.invalidate(a)
+      TextIndex.lifecycle.invalidate(a)
       val b = TextIndex.ensure(docs, key)
-      TextIndex.evictMemo(key)
+      TextIndex.lifecycle.evictMemo(key)
       val resolved = TextIndex.ensure(docs, key)
       def gen(l: TextIndex.Loaded): Long =
         l.dir.split("gen-").last.toLong
@@ -603,11 +603,11 @@ private[graft] object QueriesScanSink {
       // the rollback window only ever retains COMPLETE generations
       // (ArtifactGen.gc scaladoc; the complete-predecessor retention
       // case is ArtifactLifecycleSpec's)
-      TextIndex.invalidate(resolved)
+      TextIndex.lifecycle.invalidate(resolved)
       val c = TextIndex.ensure(docs, key)
       val rebuiltCount = c.doclen(s).count()
       val swept = ArtifactGen.gc(root, keepLast = 2)
-      TextIndex.evictMemo(key)
+      TextIndex.lifecycle.evictMemo(key)
       val afterGc = TextIndex.ensure(docs, key)
       val gcOk =
         swept.map(_.getFileName.toString).sorted == Seq("gen-1", "gen-2") &&

@@ -174,7 +174,8 @@ object AnnIndex {
                           resCbs: Array[Array[Array[Double]]],
                           key: String = "",
                           nRows: Long = -1L,
-                          span: Int = 1) {
+                          span: Int = 1)
+      extends ArtifactGen.Handle {
     def ivf(spark: SparkSession): DataFrame =
       spark.read.parquet(s"$dir/ivf")
     def pqCodes(spark: SparkSession): DataFrame =
@@ -192,86 +193,36 @@ object AnnIndex {
   def corpusKey(sfDir: String): String =
     Fingerprint.ofTables(sfDir, "embeddings")
 
-  // one build per (corpus version, JVM); concurrent ensure() callers
-  // for the same key serialize on the map value
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Loaded]()
-
   /** The artifact for `corpus` under cache key `key` (from
     * [[corpusKey]]): loaded from disk when a completed build exists
     * for this corpus version, built + persisted otherwise — through
     * the [[ArtifactGen]] generation-pointer lifecycle (rebuilds go to
     * a fresh `gen-N`, `_CURRENT` swaps atomically, stale readers keep
-    * their generation wholly-old; the s14 alias discipline).
-    *
-    * "v3": generations replaced the flat per-key dir (a layout
-    * change, so pre-round-8 artifacts are never half-read). */
+    * their generation wholly-old; the s14 alias discipline). */
   def ensure(corpus: DataFrame, key: String): Loaded =
-    memo.computeIfAbsent(key, { _ =>
-      val root = rootFor(key)
-      def resolve() = ArtifactGen.resolveOrBuild(root,
-        load = dir => load(corpus.sparkSession, dir).copy(key = key),
-        build = dir => build(corpus, dir).copy(key = key))
-      val first = resolve()
-      // cross-table LOCKSTEP validation (the DedupIndex/TextIndex
-      // discipline): addVectors' four appends are exception-safe but
-      // not crash-safe — a hard kill partway leaves _DONE intact with
-      // some encodings missing vectors the ivf table serves. Every
-      // per-vector table must agree on the row count.
-      if (lockstepValid(corpus.sparkSession, first)) first
-      else {
-        ArtifactGen.warnTearRebuild("AnnIndex", key, first.dir)
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(first.dir, "_DONE"))
-        resolve()
-      }
-    })
+    lifecycle.ensure(corpus.sparkSession, key)(
+      load = dir => load(corpus.sparkSession, dir).copy(key = key),
+      build = dir => build(corpus, dir).copy(key = key))
 
-  /** One row per vector in EVERY encoding table — the invariant each
-    * addVectors tear point breaks (the four appends land in order:
-    * ivf, pq_codes, ivfpq_codes, sq8). */
-  private def lockstepValid(spark: SparkSession, l: Loaded): Boolean = {
-    def checks(): Boolean = {
-      // four independent reads of settled state, overlapped (the
-      // TextIndex.lockstepValid discipline) — one wall per ensure()
-      var n, pq, ivfpq, sq8 = 0L
-      Par.run(
-        () => n = l.ivf(spark).count(),
-        () => pq = l.pqCodes(spark).count(),
-        () => ivfpq = l.ivfPqCodes(spark).count(),
-        () => sq8 = l.sq8(spark).count())
-      pq == n && ivfpq == n && sq8 == n
-    }
-    // missing table = tear; other failures get one retry (transient
-    // flake passes, persistent corruption fails twice = tear) — the
-    // TextIndex discipline
-    try checks() catch {
-      case _: org.apache.spark.sql.AnalysisException => false
-      case scala.util.control.NonFatal(_) =>
-        try checks() catch {
-          case scala.util.control.NonFatal(_) => false
-        }
-    }
-  }
-
-  /** Invalidate a managed artifact: remove `_DONE` AND evict the
-    * in-JVM memo entry — without the eviction, ensure() in the same
-    * JVM would keep serving the torn Loaded and the "next ensure()
-    * rebuilds" promise would only hold after a JVM restart. */
-  private[graft] def invalidate(l: Loaded): Unit = {
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(l.dir, "_DONE"))
-    if (l.key.nonEmpty) memo.remove(l.key)
-    ()
-  }
-
-  /** Spec hook: forget the memoized Loaded WITHOUT invalidating the
-    * on-disk artifact — models a fresh JVM resolving the `_CURRENT`
-    * pointer. */
-  private[graft] def evictMemo(key: String): Unit = { memo.remove(key); () }
+  /** The shared lifecycle. Its invariant: one row per vector in EVERY
+    * encoding table — what each addVectors tear point breaks (its four
+    * appends are exception-safe but not crash-safe; a hard kill partway
+    * leaves `_DONE` intact with some encodings missing vectors the ivf
+    * table serves). */
+  private[graft] val lifecycle = new ArtifactGen.Managed[Loaded](
+    "AnnIndex", rootFor,
+    reads = (spark, l) => Seq(
+      () => l.ivf(spark).count(),
+      () => l.pqCodes(spark).count(),
+      () => l.ivfPqCodes(spark).count(),
+      () => l.sq8(spark).count()),
+    intact = { case Seq(n, pq, ivfpq, sq8) =>
+      pq == n && ivfpq == n && sq8 == n })
 
   /** The managed root for `key` — the one place the layout version
-    * lives (the [[TextIndex.rootFor]] discipline). Any change to the
+    * lives (the [[TextIndex.rootFor]] discipline). "v3": generations
+    * replaced the flat per-key dir (a layout change, so pre-round-8
+    * artifacts are never half-read). Any change to the
     * ROUTED-ASSIGNMENT semantics (Centroids.RouteBeam, RouteThreshold,
     * the routing construction) REQUIRES a bump here: persisted cell
     * assignments were made under the old semantics and the corpus
@@ -552,10 +503,10 @@ object AnnIndex {
       "— dedup the batch before ingesting it")
     // the four appends are not transactional: a failure partway leaves
     // ivf/ ahead of pq_codes/sq8 AND blocks the retry (the dup check
-    // consults ivf) — so a partial append INVALIDATES the artifact
-    // (_DONE removed) and the next ensure() rebuilds, instead of IVF
-    // probes seeing vectors the PQ/SQ8 paths silently miss forever
-    try {
+    // consults ivf) — so the commit guard INVALIDATES the artifact and
+    // the next ensure() rebuilds, instead of IVF probes seeing vectors
+    // the PQ/SQ8 paths silently miss forever
+    lifecycle.commit(base, "vector append") {
       // cluster by the partition key before the partitioned append —
       // the build's file-count discipline applied to segments: a
       // delta lands one file per touched cell (or cgrp, under the
@@ -565,7 +516,7 @@ object AnnIndex {
       // CONCURRENTLY (Par awaits all four before any rethrow, so the
       // invalidation below never races a still-running writer); any
       // hard-crash subset leaves the four row counts disagreeing,
-      // which is exactly what lockstepValid flags — order never
+      // which is exactly what the lifecycle invariant flags — order never
       // mattered for tear detection here, only count equality.
       val dim = base.cents.head.length
       Par.run(
@@ -580,13 +531,6 @@ object AnnIndex {
           recordsPerFile(4L * base.resCbs.length + 8)),
         () => Similarity.quantizedIndex(delta)
           .write.mode("append").parquet(s"${base.dir}/sq8"))
-    } catch {
-      case e: Throwable =>
-        invalidate(base)
-        throw new IllegalStateException(
-          s"partial vector append into ${base.dir} — artifact " +
-            "invalidated (_DONE removed, memo evicted), next ensure() " +
-            "rebuilds", e)
     }
     // the live row count rides the handle so [[search]]'s shortlist
     // depth keeps tracking the TRUE candidate count as frozen-
@@ -595,7 +539,7 @@ object AnnIndex {
     // is refreshed so later ensure() callers see it too
     val grown =
       if (base.nRows > 0) base.copy(nRows = base.nRows + nDelta) else base
-    if (grown.key.nonEmpty) memo.replace(grown.key, grown)
+    lifecycle.refresh(grown)
     grown
   }
 
@@ -610,21 +554,9 @@ object AnnIndex {
     * id-column pass over the ivf table. */
   def deleteVectors(spark: SparkSession, base: Loaded,
                     ids: DataFrame): Long = {
-    val victims = ids.select(col("vec_id"))
+    lifecycle.tombstone(base, ids.select(col("vec_id"))
       .join(liveView(spark, base,
-        base.ivf(spark).select(col("vec_id"))), Seq("vec_id"), "left_semi")
-      .distinct()
-      // pinned across its two consumers: count() and the tombstone
-      // append otherwise each re-run the ids ⋈ ivf membership join —
-      // the TextIndex.deleteByQuery discipline, which this path
-      // missed (st13 pays the double pass per micro-batch)
-      .persist()
-    try {
-      val n = victims.count()
-      if (n > 0)
-        victims.write.mode("append").parquet(s"${base.dir}/deletes")
-      n
-    } finally { victims.unpersist(blocking = false); () }
+        base.ivf(spark).select(col("vec_id"))), Seq("vec_id"), "left_semi"))
   }
 
   /** An index table restricted to LIVE (non-tombstoned) vectors — the
@@ -632,18 +564,7 @@ object AnnIndex {
     * purge. Empty-safe: no deletes dir ⇒ pass-through. */
   def liveView(spark: SparkSession, base: Loaded,
                table: DataFrame): DataFrame =
-    if (!hasDeletes(spark, base)) table
-    else table.join(spark.read.parquet(s"${base.dir}/deletes"),
-      Seq("vec_id"), "left_anti")
-
-  /** Tombstone-table probe through the Hadoop `FileSystem` that
-    * writes it — the [[TextIndex]] discipline; a `java.nio` probe
-    * answers false off the local tmpdir and silently unmasks every
-    * tombstone. */
-  private def hasDeletes(spark: SparkSession, base: Loaded): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"${base.dir}/deletes")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+    lifecycle.liveView(spark, base, table, "vec_id")
 
   /** Tombstone-pressure purge policy — the [[TextIndex.maybePurge]]
     * discipline for vectors (FAISS deployments likewise batch
@@ -655,7 +576,7 @@ object AnnIndex {
   def maybePurge(spark: SparkSession, base: Loaded,
                  maxRatio: Double = 0.1): Boolean = {
     require(maxRatio > 0.0, "maxRatio must be positive")
-    if (!hasDeletes(spark, base)) return false
+    if (!lifecycle.hasDeletes(spark, base)) return false
     // BOTH pressure numbers from ONE job (was: a deletes count job plus
     // a full ivf count job per micro-batch — runVectorDeleteIngest pays
     // this per batch): union the two tables' footer-count scans with a
@@ -679,52 +600,42 @@ object AnnIndex {
 
   /** Physically drop tombstoned vectors from ivf, pq_codes,
     * ivfpq_codes and sq8 (write-tmp + swap per table; a torn swap
-    * invalidates the artifact and evicts the memo, the
-    * [[TextIndex]] swapIn discipline), then clear the tombstones.
+    * invalidates the artifact and evicts the memo —
+    * [[ArtifactGen.Managed.swapIn]]), then clear the tombstones.
     * Corpus-sized by design — the scheduled merge, like
     * [[TextIndex.purgeDeletes]]. */
   def purgeDeletes(spark: SparkSession, base: Loaded): Loaded = {
-    if (!hasDeletes(spark, base)) return base
-    // the grouped layout partitions on cgrp (a column the read-back
-    // frame already carries) and keeps cells contiguous via the sort;
-    // span 1 is the unchanged per-cell rewrite
-    val (pCols, sCols) =
-      if (base.span > 1) (Seq("cgrp"), Seq("cgrp", "cell", "vec_id"))
-      else (Seq("cell"), Seq("cell", "vec_id"))
-    // grouped rewrites must keep the build's file-roll bound: one
-    // cgrp holds span cells (~n/GroupCap rows), and a purge without
-    // maxRecordsPerFile would fuse each group into one unbounded
-    // file, silently undoing the size cap until a rebuild
+    if (!lifecycle.hasDeletes(spark, base)) return base
+    // the cell-partitioned rewrites go through the build's writer
+    // (writeCellTable: clustered on the partition key, within-cell
+    // vec_id sort, and — grouped — the same file-roll bound; without
+    // it a purge would fuse each cgrp into one unbounded file)
     // the four rewrites are independent (separate tables, separate
     // tmp+swap dirs) and run CONCURRENTLY (Par scaladoc); deletes/ is
     // cleared only after all four land, so an interrupted purge still
     // masks through liveView, and any crash subset leaves the four
-    // row counts disagreeing — exactly what lockstepValid flags
+    // row counts disagreeing — exactly what the lifecycle flags
     val dim = base.cents.head.length
     // the refreshed live row count rides the ivf rewrite itself (an
     // Observation on the frame the swap already scans) instead of a
     // separate post-swap count job — one fewer corpus pass per purge
     val obs = org.apache.spark.sql.Observation()
     Par.run(
-      () => swapIn(spark, base, "ivf",
+      () => lifecycle.swapIn(spark, base, "ivf")(writeCellTable(
         liveView(spark, base, base.ivf(spark))
           .observe(obs, count(lit(1)).as("n")),
-        partitionCols = pCols, sortCols = sCols,
-        maxRecords =
-          if (base.span > 1) recordsPerFile(8L * dim + 20) else 0L),
-      () => swapIn(spark, base, "pq_codes",
-        liveView(spark, base, base.pqCodes(spark))),
-      () => swapIn(spark, base, "ivfpq_codes",
+        _, base.span, "overwrite", recordsPerFile(8L * dim + 20))),
+      () => lifecycle.swapIn(spark, base, "pq_codes")(
+        liveView(spark, base, base.pqCodes(spark))
+          .write.mode("overwrite").parquet(_)),
+      () => lifecycle.swapIn(spark, base, "ivfpq_codes")(writeCellTable(
         liveView(spark, base, base.ivfPqCodes(spark)),
-        partitionCols = pCols, sortCols = sCols,
-        maxRecords =
-          if (base.span > 1) recordsPerFile(4L * base.resCbs.length + 8)
-          else 0L),
-      () => swapIn(spark, base, "sq8",
-        liveView(spark, base, base.sq8(spark))))
-    val fs = new org.apache.hadoop.fs.Path(base.dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"${base.dir}/deletes"), true)
+        _, base.span, "overwrite",
+        recordsPerFile(4L * base.resCbs.length + 8))),
+      () => lifecycle.swapIn(spark, base, "sq8")(
+        liveView(spark, base, base.sq8(spark))
+          .write.mode("overwrite").parquet(_)))
+    lifecycle.clearDeletes(spark, base)
     // refresh the live row count riding the handle (the addVectors
     // discipline in reverse): without it, load()'s pre-purge count —
     // which included tombstoned rows — permanently over-sizes the
@@ -732,53 +643,8 @@ object AnnIndex {
     // an artifact rebuild. Recall-safe either way; this is the cost
     // side. The count was observed during the ivf rewrite above.
     val purged = base.copy(nRows = obs.get("n").asInstanceOf[Long])
-    if (purged.key.nonEmpty) memo.replace(purged.key, purged)
+    lifecycle.refresh(purged)
     purged
-  }
-
-  /** Overwrite `base`'s `sub` table with `df` where `df` READS from
-    * it — write-tmp + swap, invalidating (marker + memo) on either
-    * failure mode, exactly [[TextIndex]]'s swapIn. */
-  private def swapIn(spark: SparkSession, base: Loaded, sub: String,
-                     df: DataFrame,
-                     partitionCols: Seq[String] = Seq.empty,
-                     sortCols: Seq[String] = Seq.empty,
-                     maxRecords: Long = 0L): Unit = {
-    val path = s"${base.dir}/$sub"
-    val tmp = path + ".swap-tmp"
-    // cluster on the partition key first — the build's file-count
-    // discipline (one file per partition value, not tasks × values) —
-    // and keep the v7 within-cell vec_id sort through a purge rewrite
-    // (the prefix on the partition cols satisfies the writer's
-    // required ordering, so no second sort is inserted). `sortCols`
-    // overrides the default partition-cols-plus-id order where the
-    // grouped layout needs `cell` between cgrp and vec_id.
-    val clustered =
-      if (partitionCols.nonEmpty) {
-        val order =
-          if (sortCols.nonEmpty) sortCols else partitionCols :+ "vec_id"
-        df.repartition(partitionCols.map(col): _*)
-          .sortWithinPartitions(order.map(col): _*)
-      } else df
-    val w0 = clustered.write.mode("overwrite")
-    val w = if (maxRecords > 0)
-      w0.option("maxRecordsPerFile", maxRecords) else w0
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(path)
-    if (!fs.delete(target, true) && fs.exists(target)) {
-      invalidate(base)
-      sys.error(s"swap failed: could not delete $path — artifact " +
-        "invalidated (_DONE removed, memo evicted), next ensure() rebuilds")
-    }
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), target)) {
-      invalidate(base)
-      sys.error(s"swap failed: could not rename $tmp over $path — " +
-        "artifact invalidated (_DONE removed, memo evicted), next " +
-        "ensure() rebuilds")
-    }
   }
 
   /** Reload the driver-side structures from a completed artifact. */

@@ -2,10 +2,12 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
 
-/** Generation-directory + pointer lifecycle for persisted ingest
-  * artifacts ([[TextIndex]], [[AnnIndex]]) — the same
-  * versioned-dir-behind-an-atomic-alias discipline as
+/** Generation-directory + pointer lifecycle for the three persisted
+  * ingest artifacts ([[TextIndex]], [[AnnIndex]], [[DedupIndex]]) — the
+  * same versioned-dir-behind-an-atomic-alias discipline as
   * [[graft.sources.Sink.aliasSwap]] (ES's index-alias swap, s14).
   *
   * Why: a rebuild that writes `mode("overwrite")` INTO the directory a
@@ -30,6 +32,20 @@ import scala.jdk.CollectionConverters._
   * invalidation event, which is rare); at scale a janitor deletes
   * generations older than the previous one once their readers drain —
   * the standard alias-swap GC.
+  *
+  * Each family owns one [[Managed]] — the in-JVM memo, `ensure`, the
+  * tear check, invalidation, the tmp+rename table swap, the tombstone
+  * table and the commit guard — and keeps only its readers, its
+  * versioned root, its build and mutation bodies, and its cross-table
+  * invariant. ONE tear policy holds for all three: appends within a
+  * generation are exception-safe (the commit guard invalidates) but not
+  * crash-safe, so every `ensure` checks the invariant on the resolved
+  * generation. A missing table (`AnalysisException`) is a tear at once;
+  * any other read failure is retried once — a transient flake passes
+  * the second attempt and must not destroy a healthy artifact's
+  * `_DONE` — and a second failure is a tear too, so persistent
+  * corruption cannot wedge every `ensure`. A tear is logged
+  * ([[warnTearRebuild]]) and rebuilt into a fresh generation.
   */
 object ArtifactGen {
 
@@ -121,12 +137,9 @@ object ArtifactGen {
       paths.foreach(p => Files.deleteIfExists(p))
     }
 
-  /** The shared resolve-or-build body of every managed `ensure()`:
-    * resolve `_CURRENT` to a completed generation and `load` it, else
-    * `build` into a FRESH generation and publish it. One
-    * implementation for all three artifact families (text, vector,
-    * dedup) so a lifecycle fix is single-site — the per-family
-    * objects keep only their memo and their table readers. */
+  /** The resolve-or-build body of [[Managed.ensure]]: resolve
+    * `_CURRENT` to a completed generation and `load` it, else `build`
+    * into a FRESH generation and publish it. */
   def resolveOrBuild[L](root: Path, load: String => L,
                         build: String => L): L =
     currentDir(root) match {
@@ -238,5 +251,170 @@ object ArtifactGen {
     Files.move(tmp, root.resolve("_CURRENT"),
       StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** What the shared lifecycle needs of a family's reader handle: its
+    * generation directory and its memo key (empty for ad-hoc builds
+    * into scratch dirs, which no memo entry backs). */
+  trait Handle {
+    def dir: String
+    def key: String
+  }
+
+  /** The managed lifecycle of one artifact family.
+    *
+    * `rootFor` maps a memo key to the family's versioned root.
+    * `reads` are the invariant's independent reads of settled on-disk
+    * state, run overlapped ([[Par]]) — one wall per `ensure`, not one
+    * per read; `intact` is the invariant over their results, in order.
+    */
+  final class Managed[L <: Handle](family: String,
+                                   rootFor: String => Path,
+                                   reads: (SparkSession, L) => Seq[() => Long],
+                                   intact: Seq[Long] => Boolean) {
+
+    // one build per (key, JVM); concurrent ensure() callers for the
+    // same key serialize on the map value
+    private val memo = new java.util.concurrent.ConcurrentHashMap[String, L]()
+
+    /** The artifact under `key`: the memoized handle, else `load` the
+      * live generation, else `build` a fresh one and publish it
+      * ([[resolveOrBuild]]). A resolved generation that fails the
+      * invariant is logged and rebuilt into a fresh generation; `load`
+      * and `build` get the generation dir and return a handle keyed by
+      * `key`. */
+    def ensure(spark: SparkSession, key: String)(load: String => L,
+                                                 build: String => L): L =
+      memo.computeIfAbsent(key, { _ =>
+        def resolve() = resolveOrBuild(rootFor(key), load, build)
+        val first = resolve()
+        if (lockstepValid(spark, first)) first
+        else {
+          // invalidate ON DISK only — inside computeIfAbsent, touching
+          // the memo would be a recursive map update (the key isn't
+          // mapped yet anyway)
+          warnTearRebuild(family, key, first.dir)
+          Files.deleteIfExists(Paths.get(first.dir, "_DONE"))
+          resolve()
+        }
+      })
+
+    /** The invariant under the one tear policy (object scaladoc): a
+      * missing table is a tear, any other failure gets one retry. */
+    private def lockstepValid(spark: SparkSession, l: L): Boolean = {
+      def checks(): Boolean = {
+        val rs = reads(spark, l)
+        val got = new Array[Long](rs.length)
+        Par.run(rs.zipWithIndex.map { case (r, i) => () => got(i) = r() }: _*)
+        intact(got.toSeq)
+      }
+      try checks() catch {
+        case _: AnalysisException => false
+        case scala.util.control.NonFatal(_) =>
+          try checks() catch {
+            case scala.util.control.NonFatal(_) => false
+          }
+      }
+    }
+
+    /** Invalidate a managed artifact: remove its `_DONE` marker (so the
+      * pointer resolves to "no live artifact") AND evict the memo entry
+      * — without the eviction, ensure() in the same JVM would keep
+      * serving the torn handle and "next ensure() rebuilds" would only
+      * hold after a JVM restart. */
+    def invalidate(l: L): Unit = {
+      Files.deleteIfExists(Paths.get(l.dir, "_DONE"))
+      if (l.key.nonEmpty) memo.remove(l.key)
+      ()
+    }
+
+    /** Forget the memoized handle WITHOUT invalidating the on-disk
+      * artifact — what a fresh JVM resolving `_CURRENT` looks like. */
+    def evictMemo(key: String): Unit = { memo.remove(key); () }
+
+    /** Replace the memoized handle for `l.key` with `l` (a mutation
+      * that changed driver-side state the handle carries). */
+    def refresh(l: L): Unit =
+      if (l.key.nonEmpty) { memo.replace(l.key, l); () }
+
+    /** Run a multi-table commit into `l`. The appends are not
+      * transactional: a failure partway is a TORN artifact, so it is
+      * invalidated (`_DONE` removed, memo evicted) and the failure
+      * rethrown — the next ensure() rebuilds a fresh generation. */
+    def commit[T](l: L, what: String)(body: => T): T =
+      try body catch {
+        case e: Throwable =>
+          invalidate(l)
+          throw new IllegalStateException(
+            s"partial $what into ${l.dir} — artifact invalidated " +
+              "(_DONE removed, memo evicted), next ensure() rebuilds", e)
+      }
+
+    /** Overwrite `l`'s `sub` table where the new content READS from it:
+      * `write` puts it in a sibling tmp dir, then the directories swap.
+      * The delete+rename pair is NOT atomic (and rename can FAIL on
+      * cross-filesystem tmp or object stores), so both outcomes are
+      * handled loudly: a failed delete or rename — or a JVM that died
+      * between them, seen as a missing table by the next ensure() —
+      * invalidates the artifact before throwing. */
+    def swapIn(spark: SparkSession, l: L, sub: String)(
+        write: String => Unit): Unit = {
+      val path = s"${l.dir}/$sub"
+      val tmp = path + ".swap-tmp"
+      write(tmp)
+      val target = new HPath(path)
+      val fs = fsOf(spark, target)
+      if (!fs.delete(target, true) && fs.exists(target)) {
+        invalidate(l)
+        sys.error(s"swap failed: could not delete $path — artifact " +
+          "invalidated (_DONE removed, memo evicted), next ensure() rebuilds")
+      }
+      if (!fs.rename(new HPath(tmp), target)) {
+        invalidate(l)
+        sys.error(s"swap failed: could not rename $tmp over $path — " +
+          "artifact invalidated (_DONE removed, memo evicted), next " +
+          "ensure() rebuilds")
+      }
+    }
+
+    private def fsOf(spark: SparkSession, p: HPath) =
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+    private def deletesPath(l: L) = new HPath(s"${l.dir}/deletes")
+
+    /** Does `l` hold a tombstone table? Probed through the Hadoop
+      * `FileSystem` that WRITES it — a `java.nio` probe silently
+      * answers false the day artifacts move off the local tmpdir,
+      * masking every tombstone. */
+    def hasDeletes(spark: SparkSession, l: L): Boolean =
+      fsOf(spark, deletesPath(l)).exists(deletesPath(l))
+
+    /** Append the distinct `victims` (one `id` column) to the tombstone
+      * table; returns how many. Pinned across its two consumers: the
+      * count and the append would otherwise each re-run the caller's
+      * membership join. */
+    def tombstone(l: L, victims: DataFrame): Long = {
+      val v = victims.distinct().persist()
+      try {
+        val n = v.count()
+        if (n > 0) v.write.mode("append").parquet(deletesPath(l).toString)
+        n
+      } finally { v.unpersist(blocking = false); () }
+    }
+
+    /** `table` restricted to LIVE rows — an anti-join on `id` against
+      * the tombstones; pass-through when there are none. */
+    def liveView(spark: SparkSession, l: L, table: DataFrame,
+                 id: String): DataFrame =
+      if (!hasDeletes(spark, l)) table
+      else table.join(spark.read.parquet(deletesPath(l).toString),
+        Seq(id), "left_anti")
+
+    /** Drop the tombstone table once a purge made it physical (a
+      * failure here leaves a consistent artifact + stale tombstones:
+      * deletes are idempotent). */
+    def clearDeletes(spark: SparkSession, l: L): Unit = {
+      fsOf(spark, deletesPath(l)).delete(deletesPath(l), true); ()
+    }
   }
 }

@@ -221,12 +221,18 @@ object Dedup {
     * is over ROUNDS (a handful), never over rows.
     *
     * Returns (idCol, cluster_id) for every doc; singletons cluster to
-    * themselves. */
+    * themselves. Every endpoint of `pairs` must be a doc (`require`):
+    * labels start from `docs` only, so propagation could not route
+    * through a stray endpoint and its component would split silently. */
   def dupClusters(docs: DataFrame, pairs: DataFrame,
                   idCol: String = "doc_id", maxRounds: Int = 20): DataFrame = {
     val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
       .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
       .localCheckpoint()
+    // both directions are in `edges`, so `u` covers every endpoint
+    require(edges.join(docs.select(col(idCol).as("u")), Seq("u"), "left_anti")
+        .isEmpty,
+      s"dupClusters: pair endpoints missing from docs' $idCol")
     var labels = docs.select(col(idCol).as("id"), col(idCol).as("label"))
       .localCheckpoint()
     var round = 0

@@ -30,11 +30,13 @@ import org.apache.spark.sql.functions._
   *
   * Lifecycle: generation-pointer managed ([[ArtifactGen]]) like the
   * other two artifacts — rebuilds land in fresh generations,
-  * invalidation evicts the in-JVM memo.
+  * invalidation evicts the in-JVM memo, and a torn generation is
+  * found and rebuilt under the one tear policy stated there.
   */
 object DedupIndex {
 
-  final case class Loaded(dir: String, key: String = "") {
+  final case class Loaded(dir: String, key: String = "")
+      extends ArtifactGen.Handle {
     def fingerprints(spark: SparkSession): DataFrame =
       spark.read.parquet(s"$dir/fingerprints")
     def buckets(spark: SparkSession): DataFrame =
@@ -43,9 +45,6 @@ object DedupIndex {
       spark.read.parquet(s"$dir/shingle_sets")
   }
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Loaded]()
-
   /** "v2": the build switched to representative-only buckets/shingle
     * tables (layout-visible change — earlier all-docs artifacts would
     * trip the exact lockstep invariant, so they are never half-read). */
@@ -53,68 +52,29 @@ object DedupIndex {
     java.nio.file.Paths
       .get(sys.props("java.io.tmpdir"), "graft_dedup_index", "v2", key)
 
-  private[graft] def evictMemo(key: String): Unit = { memo.remove(key); () }
-
-  private[graft] def invalidate(l: Loaded): Unit = {
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(l.dir, "_DONE"))
-    if (l.key.nonEmpty) memo.remove(l.key)
-    ()
-  }
-
   def ensure(docs: DataFrame, key: String): Loaded =
-    memo.computeIfAbsent(key, { _ =>
-      val root = rootFor(key)
-      def resolve() = ArtifactGen.resolveOrBuild(root,
-        load = dir => Loaded(dir, key),
-        build = dir => build(docs, dir).copy(key = key))
-      val first = resolve()
-      // the three tables must be in LOCKSTEP (the round-8 advisor
-      // finding): addBatch's appends are exception-safe but not
-      // crash-safe — a hard JVM kill after the fingerprints append
-      // but before buckets/shingle_sets leaves _DONE intact while the
-      // exact screen knows docs the near-dup verify side doesn't.
-      // Three metadata counts catch every such tear; a torn artifact
-      // is invalidated and rebuilt into a fresh generation.
-      if (lockstepValid(docs.sparkSession, first)) first
-      else {
-        // invalidate ON DISK only — we're inside computeIfAbsent, so
-        // touching the memo here would be a recursive map update (the
-        // key isn't mapped yet anyway)
-        ArtifactGen.warnTearRebuild("DedupIndex", key, first.dir)
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(first.dir, "_DONE"))
-        resolve()
-      }
-    })
+    lifecycle.ensure(docs.sparkSession, key)(
+      load = dir => Loaded(dir, key),
+      build = dir => build(docs, dir).copy(key = key))
 
-  /** The cross-table invariants a complete artifact always satisfies
-    * (build and append both store one row-set per fingerprint
-    * representative): one shingle row per fingerprint, and bucket
+  /** The shared lifecycle. The three tables must be in LOCKSTEP:
+    * addBatch's appends are exception-safe but not crash-safe — a hard
+    * JVM kill after the fingerprints append but before
+    * buckets/shingle_sets leaves `_DONE` intact while the exact screen
+    * knows docs the near-dup verify side doesn't. Build and append
+    * both store one row-set per fingerprint representative, so a
+    * complete artifact has one shingle row per fingerprint, and bucket
     * rows a whole multiple of the band count, at most [[Dedup.Bands]]
     * per fingerprint (shingle-less/null-text representatives band to
-    * nothing, so ≤, not ==). A missing table is the same tear,
-    * louder; any other read failure propagates — a transient FS error
-    * must not destroy a healthy artifact's `_DONE`. */
-  private def lockstepValid(spark: SparkSession, l: Loaded): Boolean = {
-    def checks(): Boolean = {
-      // three independent reads of settled state, overlapped (the
-      // TextIndex.lockstepValid discipline) — one wall per ensure()
-      var f, s, b = 0L
-      Par.run(
-        () => f = l.fingerprints(spark).count(),
-        () => s = l.shingleSets(spark).count(),
-        () => b = l.buckets(spark).count())
-      f == s && b % Dedup.Bands == 0 && b <= f * Dedup.Bands
-    }
-    try checks() catch {
-      case _: org.apache.spark.sql.AnalysisException => false
-      case scala.util.control.NonFatal(_) =>
-        try checks() catch {
-          case scala.util.control.NonFatal(_) => false
-        }
-    }
-  }
+    * nothing, so ≤, not ==). */
+  private[graft] val lifecycle = new ArtifactGen.Managed[Loaded](
+    "DedupIndex", rootFor,
+    reads = (spark, l) => Seq(
+      () => l.fingerprints(spark).count(),
+      () => l.shingleSets(spark).count(),
+      () => l.buckets(spark).count()),
+    intact = { case Seq(f, s, b) =>
+      f == s && b % Dedup.Bands == 0 && b <= f * Dedup.Bands })
 
   /** The ingest job: fingerprint, signature-band, and shingle the
     * standing corpus ONCE; every screening batch thereafter only
@@ -186,9 +146,8 @@ object DedupIndex {
     * them. O(batch) parquet appends to all three tables; fingerprints
     * new to the index are keyed by the batch's min doc id (intra-batch
     * duplicates collapse to one survivor). A failure partway tears
-    * the artifact — `_DONE` removed and the memo evicted so the next
-    * ensure() rebuilds a fresh generation, the [[TextIndex]]
-    * discipline. Returns (batch docs whose fingerprint entered the
+    * the artifact — the commit guard removes `_DONE` and evicts the
+    * memo so the next ensure() rebuilds a fresh generation. Returns (batch docs whose fingerprint entered the
     * index, fingerprints added); NULL-text docs are excluded from
     * both — they are unindexable by content (see the in-body note)
     * and re-screen as arrivals every delivery, matching d10's oracle
@@ -293,18 +252,12 @@ object DedupIndex {
       // {fps, shingle_sets} appended without buckets — a tear the ≤
       // bucket-count invariant cannot always flag.
       val keptSets = Dedup.withHashedShingleSet(kept).persist()
-      try {
+      try lifecycle.commit(ix, "batch append") {
         newFps.select(col("fingerprint"), col("keep_id"))
           .write.mode("append").parquet(s"${ix.dir}/fingerprints")
         Dedup.bandBucketsFromSets(keptSets)
           .write.mode("append").parquet(s"${ix.dir}/buckets")
         keptSets.write.mode("append").parquet(s"${ix.dir}/shingle_sets")
-      } catch {
-        case e: Throwable =>
-          invalidate(ix)
-          throw new IllegalStateException(
-            s"partial batch append into ${ix.dir} — artifact invalidated " +
-              "(_DONE removed, memo evicted), next ensure() rebuilds", e)
       } finally { keptSets.unpersist(blocking = false); () }
       (nNew, nFps)
     } finally

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.SparkSession
+
 /** Run INDEPENDENT Spark actions concurrently from the driver — the
   * overlap-independent-jobs discipline: Spark's scheduler happily runs
   * several jobs at once inside one application, and actions are only
@@ -19,7 +21,15 @@ package graft.operators
   *    an artifact (the addSegment/addVectors torn-commit discipline);
   *  - the FIRST failure is rethrown (others are suppressed onto it);
   *  - a fresh pool per call, threads inherit the calling thread's
-  *    inheritable locals, so job descriptions/groups stay attached.
+  *    inheritable locals, so job descriptions/groups stay attached;
+  *  - the Spark jobs a call's tasks submit carry a per-call job tag,
+  *    and the FIRST interrupt of the caller cancels them (a hung job is
+  *    torn down instead of waited on forever), then the await-all
+  *    contract holds as above. The call rethrows an
+  *    `InterruptedException` with those cancellations suppressed onto
+  *    it; a genuine task failure still wins, with the interrupt
+  *    suppressed onto it. A tag, not a job group: the group would
+  *    overwrite the caller's own.
   *
   * Tear-detection note: callers that depend on a lockstep-validation
   * ORDER (e.g. TextIndex.addSegment's doclen-first / corpus-last
@@ -30,14 +40,23 @@ private[graft] object Par {
   def run(tasks: (() => Unit)*): Unit = {
     if (tasks.isEmpty) return
     if (tasks.length == 1) { tasks.head(); return }
+    val sc = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val tag = s"graft-par-${java.util.UUID.randomUUID()}"
+    // a failure whose cause chain names the tag is this call's own
+    // cancellation, not a task failure
+    def cancelled(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(c => c.getMessage != null && c.getMessage.contains(tag))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.length)
     try {
       val futs = tasks.map { t =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = t()
+          def call(): Unit = { sc.foreach(_.addJobTag(tag)); t() }
         })
       }
       var err: Throwable = null
+      val cancels = Seq.newBuilder[Throwable]
       var interrupted = false
       futs.foreach { f =>
         // an interrupt of the CALLING thread must not break the
@@ -51,9 +70,16 @@ private[graft] object Par {
           try { f.get(); done = true } catch {
             case e: java.util.concurrent.ExecutionException =>
               val c = if (e.getCause != null) e.getCause else e
-              if (err == null) err = c else err.addSuppressed(c)
+              if (interrupted && cancelled(c)) cancels += c
+              else if (err == null) err = c else err.addSuppressed(c)
               done = true
             case _: InterruptedException =>
+              // a failed cancel (e.g. a stopped context) must not break
+              // the await-all loop — it rides on the InterruptedException
+              if (!interrupted)
+                try sc.foreach(_.cancelJobsWithTag(tag,
+                  s"Par.run caller interrupted ($tag)"))
+                catch { case scala.util.control.NonFatal(e) => cancels += e }
               interrupted = true
           }
         }
@@ -62,6 +88,7 @@ private[graft] object Par {
         Thread.currentThread().interrupt()
         val ie = new InterruptedException(
           "interrupted while awaiting Par tasks (all tasks completed)")
+        cancels.result().foreach(ie.addSuppressed)
         if (err == null) err = ie else err.addSuppressed(ie)
       }
       if (err != null) throw err

@@ -1028,7 +1028,7 @@ object Search {
   def rareTermsIndexed(spark: SparkSession, ix: TextIndex.Loaded,
                        maxDocCount: Int = 2): DataFrame = {
     val df =
-      if (TextIndex.hasDeletes(spark, ix))
+      if (TextIndex.lifecycle.hasDeletes(spark, ix))
         TextIndex.liveView(spark, ix, ix.shingles(spark))
           .groupBy(col("term")).agg(count(lit(1)).as("df"))
       else ix.shingleDf(spark)

@@ -61,7 +61,8 @@ object TextIndex {
     * managed lifecycle (empty for ad-hoc [[build]]s into scratch
     * dirs) — it lets invalidation evict the in-JVM memo entry, not
     * just the on-disk `_DONE` marker. */
-  final case class Loaded(dir: String, key: String = "") {
+  final case class Loaded(dir: String, key: String = "")
+      extends ArtifactGen.Handle {
     def postings(spark: SparkSession): DataFrame =
       spark.read.parquet(s"$dir/postings")
     def termDf(spark: SparkSession): DataFrame =
@@ -81,110 +82,49 @@ object TextIndex {
   def corpusKey(sfDir: String): String =
     Fingerprint.ofTables(sfDir, "documents")
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Loaded]()
-
   /** The artifact for `docs` under `key`, through the
     * [[ArtifactGen]] generation-pointer lifecycle: resolve `_CURRENT`
     * to a completed generation, else build a FRESH generation and
     * publish it — a rebuild after invalidation never rewrites a
     * directory a stale reader still holds (wholly-old or wholly-new,
-    * the s14 alias discipline).
+    * the s14 alias discipline). */
+  def ensure(docs: DataFrame, key: String): Loaded =
+    lifecycle.ensure(docs.sparkSession, key)(
+      load = dir => Loaded(dir, key),
+      build = dir => build(docs, dir).copy(key = key))
+
+  /** The managed root for `key` — the ONE place the layout version
+    * lives, so lifecycle callers (s15, specs) can never wipe or probe
+    * a stale version's directory.
     *
     * "v5": the shingle membership postings + dictionary joined the
     * layout ("v4" added generations and positional postings) — each
     * a layout change, so earlier artifacts are never half-read. */
-  def ensure(docs: DataFrame, key: String): Loaded =
-    memo.computeIfAbsent(key, { _ =>
-      val root = rootFor(key)
-      def resolve() = ArtifactGen.resolveOrBuild(root,
-        load = dir => Loaded(dir, key),
-        build = dir => build(docs, dir).copy(key = key))
-      val first = resolve()
-      // cross-table LOCKSTEP validation (the DedupIndex discipline):
-      // addSegment's appends are exception-safe but not crash-safe — a
-      // hard JVM kill between the doclen append and the corpus swap
-      // leaves _DONE intact with stats that no longer describe the
-      // postings. Three cheap aggregate checks catch every tear point
-      // in the append order; a torn artifact rebuilds fresh.
-      if (lockstepValid(docs.sparkSession, first)) first
-      else {
-        // on-disk invalidation only — inside computeIfAbsent, touching
-        // the memo would be a recursive map update
-        ArtifactGen.warnTearRebuild("TextIndex", key, first.dir)
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(first.dir, "_DONE"))
-        resolve()
-      }
-    })
-
-  /** Invariants every complete artifact satisfies, tombstones or not
-    * (deletes never touch these tables until a purge, which swaps all
-    * of them): the corpus row's doc count matches doclen, the
-    * dictionary's df mass matches the physical posting rows, and the
-    * shingle dictionary's mass matches the membership rows. Each
-    * addSegment tear point (crash after doclen; after postings;
-    * after a dictionary swap but before the corpus swap) breaks at
-    * least one of the three. */
-  private def lockstepValid(spark: SparkSession, l: Loaded): Boolean = {
-    def checks(): Boolean = {
-      // the six reads are independent (all describe settled on-disk
-      // state) and OVERLAPPED (Par scaladoc): the happy path — every
-      // ensure() on a fresh JVM, s15 pays it four times in-query —
-      // costs one wall instead of six serial small jobs. A torn
-      // artifact evaluates every check instead of short-circuiting,
-      // which only the rare rebuild path pays.
-      var n, doclenCnt, dfMass, postingsCnt, shMass, shinglesCnt = 0L
-      Par.run(
-        () => n = l.corpus(spark).head().getAs[Double]("n").toLong,
-        () => doclenCnt = l.doclen(spark).count(),
-        () => dfMass = l.termDf(spark)
-          .agg(coalesce(sum(col("df")), lit(0L))).head().getLong(0),
-        () => postingsCnt = l.postings(spark).count(),
-        () => shMass = l.shingleDf(spark)
-          .agg(coalesce(sum(col("df")), lit(0L))).head().getLong(0),
-        () => shinglesCnt = l.shingles(spark).count())
-      n == doclenCnt && dfMass == postingsCnt && shMass == shinglesCnt
-    }
-    // a table missing entirely (hard crash between swapIn's delete
-    // and rename) is the same tear, just louder. Any other read
-    // failure gets ONE retry: a transient flake passes the second
-    // attempt (and must not destroy a healthy artifact's _DONE),
-    // while persistent corruption — a present-but-truncated file
-    // with _DONE intact — fails twice and is treated as the tear it
-    // is, instead of wedging every ensure() forever.
-    try checks() catch {
-      case _: org.apache.spark.sql.AnalysisException => false
-      case scala.util.control.NonFatal(_) =>
-        try checks() catch {
-          case scala.util.control.NonFatal(_) => false
-        }
-    }
-  }
-
-  /** Invalidate a managed artifact: remove its `_DONE` marker (so the
-    * pointer resolves to "no live artifact") AND evict the in-JVM memo
-    * entry — without the eviction, ensure() in the same JVM would keep
-    * serving the torn Loaded and the "next ensure() rebuilds" promise
-    * would only hold after a JVM restart. */
-  private[graft] def invalidate(l: Loaded): Unit = {
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(l.dir, "_DONE"))
-    if (l.key.nonEmpty) memo.remove(l.key)
-    ()
-  }
-
-  /** Spec hook: forget the memoized Loaded WITHOUT invalidating the
-    * on-disk artifact — models a fresh JVM resolving the `_CURRENT`
-    * pointer. */
-  private[graft] def evictMemo(key: String): Unit = { memo.remove(key); () }
-
-  /** The managed root for `key` — the ONE place the layout version
-    * lives, so lifecycle callers (s15, specs) can never wipe or probe
-    * a stale version's directory. */
   private[graft] def rootFor(key: String): java.nio.file.Path =
     java.nio.file.Paths
       .get(sys.props("java.io.tmpdir"), "graft_text_index", "v5", key)
+
+  /** The shared lifecycle. Its invariant holds for every complete
+    * artifact, tombstones or not (deletes never touch these tables
+    * until a purge, which swaps all of them): the corpus row's doc
+    * count matches doclen, the dictionary's df mass matches the
+    * physical posting rows, and the shingle dictionary's mass matches
+    * the membership rows. Each addSegment tear point (crash after
+    * doclen; after postings; after a dictionary swap but before the
+    * corpus swap) breaks at least one of the three. */
+  private[graft] val lifecycle = new ArtifactGen.Managed[Loaded](
+    "TextIndex", rootFor,
+    reads = (spark, l) => Seq(
+      () => l.corpus(spark).head().getAs[Double]("n").toLong,
+      () => l.doclen(spark).count(),
+      () => l.termDf(spark)
+        .agg(coalesce(sum(col("df")), lit(0L))).head().getLong(0),
+      () => l.postings(spark).count(),
+      () => l.shingleDf(spark)
+        .agg(coalesce(sum(col("df")), lit(0L))).head().getLong(0),
+      () => l.shingles(spark).count()),
+    intact = { case Seq(n, doclen, dfMass, postings, shMass, shingles) =>
+      n == doclen && dfMass == postings && shMass == shingles })
 
   /** The ingest job: tokenize ONCE, derive postings, term dictionary,
     * length norms and corpus statistics, persist all of it. */
@@ -355,10 +295,9 @@ object TextIndex {
 
     // the segment commit touches four structures; a failure partway
     // (doclen appended, postings not; or a died dictionary swap) is a
-    // TORN index — invalidate (_DONE removed) so the next ensure()
-    // rebuilds, the AnnIndex.addVectors discipline
-    try {
-      // tear-detection bracket (lockstepValid scaladoc): the doclen
+    // TORN index — the commit guard invalidates it
+    lifecycle.commit(base, "segment commit") {
+      // tear-detection bracket (the lifecycle invariant): the doclen
       // append stays FIRST and the corpus swap stays LAST — any hard
       // crash strictly between them leaves doclen grown against the
       // old corpus row, so check 1 flags the tear no matter which of
@@ -387,10 +326,10 @@ object TextIndex {
             .select(col("doc_id"),
               explode(array_distinct(col("toks"))).as("term"))
             .groupBy(col("term")).agg(count(lit(1)).as("df"))
-          swapIn(spark, base, "term_df",
+          lifecycle.swapIn(spark, base, "term_df")(
             base.termDf(spark).unionByName(deltaDf)
               .groupBy(col("term")).agg(sum(col("df")).as("df"))
-              .coalesce(1))
+              .coalesce(1).write.mode("overwrite").parquet(_))
         },
         () => {
           // the exploded (doc_id, shingle) frame is computed ONCE and
@@ -409,10 +348,10 @@ object TextIndex {
               .write.mode("append").parquet(s"$dir/shingles")
             val deltaShingleDf = shingleRows
               .groupBy(col("term")).agg(count(lit(1)).as("df"))
-            swapIn(spark, base, "shingle_df",
+            lifecycle.swapIn(spark, base, "shingle_df")(
               base.shingleDf(spark).unionByName(deltaShingleDf)
                 .groupBy(col("term")).agg(sum(col("df")).as("df"))
-                .coalesce(1))
+                .coalesce(1).write.mode("overwrite").parquet(_))
           } finally { shingleRows.unpersist(blocking = false); () }
         })
       // the delta stats were computed INSIDE the admission aggregate
@@ -421,19 +360,13 @@ object TextIndex {
       // re-scanning the persisted delta: same exact-long additions and
       // the identical one-division-of-exact-longs, one fewer pass per
       // segment commit (the per-micro-batch serial floor st10 pays)
-      swapIn(spark, base, "corpus",
+      lifecycle.swapIn(spark, base, "corpus")(
         base.corpus(spark)
           .select((col("n") + lit(nDelta.toDouble)).as("n"),
             (col("sum_len") + lit(deltaSumLen)).as("sum_len"))
           .select(col("n"),
             (col("sum_len").cast("double") / col("n")).as("avgdl"),
-            col("sum_len")))
-    } catch {
-      case e: Throwable =>
-        invalidate(base)
-        throw new IllegalStateException(
-          s"partial segment commit into $dir — artifact invalidated " +
-            "(_DONE removed, memo evicted), next ensure() rebuilds", e)
+            col("sum_len")).write.mode("overwrite").parquet(_))
     }
     base
     } finally withLen.unpersist(blocking = false)
@@ -456,32 +389,9 @@ object TextIndex {
     * that pass; the counted contract is what the gate verifies. */
   def deleteByQuery(spark: SparkSession, base: Loaded,
                     ids: DataFrame): Long = {
-    val victims = ids.select(col("doc_id"))
+    lifecycle.tombstone(base, ids.select(col("doc_id"))
       .join(liveView(spark, base, base.doclen(spark)), Seq("doc_id"),
-        "left_semi")
-      .distinct()
-      // pinned across its two consumers: count() and the tombstone
-      // append otherwise each re-run the ids ⋈ doclen membership join
-      // (two pruned corpus passes where the scaladoc prices one —
-      // round-13 review; runDeleteIngest pays this per micro-batch)
-      .persist()
-    try {
-      val n = victims.count()
-      if (n > 0)
-        victims.write.mode("append").parquet(s"${base.dir}/deletes")
-      n
-    } finally { victims.unpersist(blocking = false); () }
-  }
-
-  /** Does the tombstone table exist? Probed through the Hadoop
-    * `FileSystem` that WRITES it (the swapIn discipline) — a
-    * `java.nio` probe silently answers false the day artifacts move
-    * off the local tmpdir, masking every tombstone (the round-8
-    * advisor finding). */
-  private[graft] def hasDeletes(spark: SparkSession,
-                                base: Loaded): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"${base.dir}/deletes")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+        "left_semi"))
   }
 
   /** A table of the artifact, restricted to LIVE (non-tombstoned)
@@ -491,9 +401,7 @@ object TextIndex {
     * until a purge is due, so this broadcasts. */
   def liveView(spark: SparkSession, base: Loaded,
                table: DataFrame): DataFrame =
-    if (!hasDeletes(spark, base)) table
-    else table.join(spark.read.parquet(s"${base.dir}/deletes"),
-      Seq("doc_id"), "left_anti")
+    lifecycle.liveView(spark, base, table, "doc_id")
 
   /** The merge that makes tombstones physical: rewrite postings and
     * doclen without the deleted docs (swapIn discipline — write-tmp +
@@ -504,7 +412,7 @@ object TextIndex {
     * Lucene amortizes deletes into; per-partition at scale like
     * [[compactPostings]]. */
   def purgeDeletes(spark: SparkSession, base: Loaded): Loaded = {
-    if (!hasDeletes(spark, base)) return base
+    if (!lifecycle.hasDeletes(spark, base)) return base
     // re-select the original column order: a using-column anti-join
     // moves the join key to the FRONT of the output (observed: purged
     // postings came back (doc_id, term, ...) without this), and a
@@ -525,41 +433,42 @@ object TextIndex {
     val shCols = base.shingles(spark).columns.map(col).toSeq
     Par.run(
       () => {
-        swapIn(spark, base, "postings",
+        lifecycle.swapIn(spark, base, "postings")(
           liveView(spark, base, base.postings(spark))
             .select(pCols: _*)
             .repartition(col("term"))
-            .sortWithinPartitions(col("term"), col("doc_id")))
-        swapIn(spark, base, "term_df",
+            .sortWithinPartitions(col("term"), col("doc_id"))
+            .write.mode("overwrite").parquet(_))
+        lifecycle.swapIn(spark, base, "term_df")(
           base.postings(spark)
             .groupBy(col("term")).agg(count(lit(1)).as("df"))
-            .coalesce(1))
+            .coalesce(1).write.mode("overwrite").parquet(_))
       },
       () => {
-        swapIn(spark, base, "shingles",
+        lifecycle.swapIn(spark, base, "shingles")(
           liveView(spark, base, base.shingles(spark))
             .select(shCols: _*)
             .repartition(col("term"))
-            .sortWithinPartitions(col("term"), col("doc_id")))
-        swapIn(spark, base, "shingle_df",
+            .sortWithinPartitions(col("term"), col("doc_id"))
+            .write.mode("overwrite").parquet(_))
+        lifecycle.swapIn(spark, base, "shingle_df")(
           base.shingles(spark)
             .groupBy(col("term")).agg(count(lit(1)).as("df"))
-            .coalesce(1))
+            .coalesce(1).write.mode("overwrite").parquet(_))
       },
       () => {
-        swapIn(spark, base, "doclen",
+        lifecycle.swapIn(spark, base, "doclen")(
           liveView(spark, base, base.doclen(spark))
-            .select(col("doc_id"), col("len")))
-        swapIn(spark, base, "corpus",
+            .select(col("doc_id"), col("len"))
+            .write.mode("overwrite").parquet(_))
+        lifecycle.swapIn(spark, base, "corpus")(
           base.doclen(spark).agg(count(lit(1)).cast("double").as("n"),
             avg(col("len")).as("avgdl"),
-            sum(col("len")).cast("long").as("sum_len")))
+            sum(col("len")).cast("long").as("sum_len"))
+            .write.mode("overwrite").parquet(_))
       })
-    // tombstones are now physical — clear them (a failure here leaves
-    // a consistent index + stale tombstones: deletes are idempotent)
-    val fs = new org.apache.hadoop.fs.Path(base.dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"${base.dir}/deletes"), true)
+    // tombstones are now physical — clear them
+    lifecycle.clearDeletes(spark, base)
     base
   }
 
@@ -582,7 +491,7 @@ object TextIndex {
   def maybePurge(spark: SparkSession, base: Loaded,
                  maxRatio: Double = 0.1): Boolean = {
     require(maxRatio > 0.0, "maxRatio must be positive")
-    if (!hasDeletes(spark, base)) return false
+    if (!lifecycle.hasDeletes(spark, base)) return false
     // two-tier check: the RAW tombstone-file row count (metadata-only,
     // the per-micro-batch steady-state cost) over-counts the exact
     // pressure (duplicates/absent ids only inflate it), so when even
@@ -618,40 +527,11 @@ object TextIndex {
     * scale, like [[graft.sources.Sink.compact]]. */
   def compactPostings(spark: SparkSession, base: Loaded): (Int, Int) = {
     val before = base.postings(spark).inputFiles.length
-    swapIn(spark, base, "postings",
+    lifecycle.swapIn(spark, base, "postings")(
       base.postings(spark)
         .repartition(col("term"))
-        .sortWithinPartitions(col("term"), col("doc_id")))
+        .sortWithinPartitions(col("term"), col("doc_id"))
+        .write.mode("overwrite").parquet(_))
     (before, base.postings(spark).inputFiles.length)
-  }
-
-  /** Overwrite `base`'s `sub` table with `df` where `df` READS from
-    * it: write to a sibling tmp dir, then swap directories. The
-    * delete+rename pair is NOT atomic (and rename can FAIL on
-    * cross-filesystem tmp or object stores), so both outcomes are
-    * handled loudly: a failed delete or rename — or a JVM that died
-    * between them, detected as a missing target on the next mutation
-    * — INVALIDATES the artifact ([[invalidate]]: `_DONE` removed AND
-    * the memo entry evicted) before throwing, so `ensure` rebuilds a
-    * fresh generation instead of serving a torn index. */
-  private def swapIn(spark: SparkSession, base: Loaded, sub: String,
-                     df: DataFrame): Unit = {
-    val path = s"${base.dir}/$sub"
-    val tmp = path + ".swap-tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(path)
-    if (!fs.delete(target, true) && fs.exists(target)) {
-      invalidate(base)
-      sys.error(s"swap failed: could not delete $path — artifact " +
-        "invalidated (_DONE removed, memo evicted), next ensure() rebuilds")
-    }
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), target)) {
-      invalidate(base)
-      sys.error(s"swap failed: could not rename $tmp over $path — " +
-        "artifact invalidated (_DONE removed, memo evicted), next " +
-        "ensure() rebuilds")
-    }
   }
 }

@@ -362,6 +362,43 @@ class AnnIndexSpec extends SparkSpec {
     assert(!AnnIndex.maybePurge(spark, ix, maxRatio = 0.1))
   }
 
+  test("maybePurge's one-job pressure count decodes no column data") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val corpus = plantedCorpus
+    val ix = AnnIndex.build(corpus, freshDir())
+    AnnIndex.deleteVectors(spark, ix,
+      corpus.filter(col("vec_id") % 50 === 0).select(col("vec_id")))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        seen.add(qe); ()
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // sub-threshold: the pressure count is the only query it runs
+      assert(!AnnIndex.maybePurge(spark, ix, maxRatio = 0.1))
+      org.apache.spark.GraftBusShim
+        .waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+    } finally spark.listenerManager.unregister(listener)
+    object Plans extends AdaptiveSparkPlanHelper
+    val scans = scala.jdk.CollectionConverters.IteratorHasAsScala(
+        seen.iterator()).asScala.toSeq
+      .map(qe => Plans.collect(qe.executedPlan) {
+        case s: FileSourceScanExec => s })
+      .filter(_.size == 2)
+    assert(scans.size == 1, s"expected one two-scan union query: $scans")
+    val tables = scans.head.map(_.relation.location.rootPaths.head.getName)
+    assert(tables.sorted == Seq("deletes", "ivf"), tables)
+    // an empty ReadSchema: both sides count rows from parquet metadata
+    // and decode no column — else the union costs more than two counts
+    scans.head.foreach(s => assert(s.requiredSchema.isEmpty,
+      s"${s.relation.location.rootPaths.head} reads ${s.requiredSchema}"))
+  }
+
   test("addVectors rejects duplicate vec_ids loudly") {
     val base = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("label"), col("embedding"))

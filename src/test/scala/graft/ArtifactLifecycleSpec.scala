@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{AnnIndex, TextIndex}
+import graft.operators.{AnnIndex, DedupIndex, TextIndex}
 import scala.jdk.CollectionConverters._
 
 /** The generation-pointer artifact lifecycle (operators.ArtifactGen):
@@ -20,7 +20,7 @@ class ArtifactLifecycleSpec extends SparkSpec {
   test("text index: rebuild publishes a fresh generation; stale reader stays wholly-old") {
     val key = "lifecycle-spec-text"
     val root = TextIndex.rootFor(key)
-    TextIndex.evictMemo(key)
+    TextIndex.lifecycle.evictMemo(key)
     wipe(root)
     val docs1 = Seq((1L, "alpha beta"), (2L, "beta gamma"))
       .toDF("doc_id", "text")
@@ -29,7 +29,7 @@ class ArtifactLifecycleSpec extends SparkSpec {
 
     // a torn append invalidates: _DONE removed AND the memo evicted —
     // the SAME JVM must rebuild on the next ensure()
-    TextIndex.invalidate(a)
+    TextIndex.lifecycle.invalidate(a)
     val docs2 = (1L to 5L).map(i => (i, s"delta epsilon d$i"))
       .toDF("doc_id", "text")
     val b = TextIndex.ensure(docs2, key)
@@ -47,14 +47,14 @@ class ArtifactLifecycleSpec extends SparkSpec {
 
     // a fresh JVM (memo evicted, disk intact) resolves the pointer to
     // the PUBLISHED generation — no rebuild (a rebuild would be gen-3)
-    TextIndex.evictMemo(key)
+    TextIndex.lifecycle.evictMemo(key)
     assert(TextIndex.ensure(docs2, key).dir == b.dir)
   }
 
   test("ann index: rebuild publishes a fresh generation; stale reader stays wholly-old") {
     val key = "lifecycle-spec-ann"
     val root = AnnIndex.rootFor(key)
-    AnnIndex.evictMemo(key)
+    AnnIndex.lifecycle.evictMemo(key)
     wipe(root)
     val corpus = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("label"), col("embedding"))
@@ -63,7 +63,7 @@ class ArtifactLifecycleSpec extends SparkSpec {
     val nIvf = a.ivf(spark).count()
     val nPq = a.pqCodes(spark).count()
 
-    AnnIndex.invalidate(a)
+    AnnIndex.lifecycle.invalidate(a)
     val b = AnnIndex.ensure(corpus, key)
     assert(b.dir != a.dir && b.dir.endsWith("gen-2"),
       s"rebuild must go to a fresh generation: ${a.dir} -> ${b.dir}")
@@ -73,7 +73,7 @@ class ArtifactLifecycleSpec extends SparkSpec {
     assert(a.pqCodes(spark).count() == nPq)
     assert(a.sq8(spark).count() == nIvf)
 
-    AnnIndex.evictMemo(key)
+    AnnIndex.lifecycle.evictMemo(key)
     assert(AnnIndex.ensure(corpus, key).dir == b.dir)
   }
 
@@ -81,7 +81,7 @@ class ArtifactLifecycleSpec extends SparkSpec {
     import spark.implicits._
     val key = "lockstep-spec-text"
     val root = TextIndex.rootFor(key)
-    TextIndex.evictMemo(key)
+    TextIndex.lifecycle.evictMemo(key)
     wipe(root)
     val docs = Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta"))
       .toDF("doc_id", "text")
@@ -90,21 +90,21 @@ class ArtifactLifecycleSpec extends SparkSpec {
     // corpus swap: _DONE intact, stats no longer describe the tables
     Seq((99L, 3)).toDF("doc_id", "len")
       .write.mode("append").parquet(s"${a.dir}/doclen")
-    TextIndex.evictMemo(key)
+    TextIndex.lifecycle.evictMemo(key)
     val b = TextIndex.ensure(docs, key)
     assert(b.dir != a.dir,
       s"a torn artifact must rebuild into a fresh generation: ${b.dir}")
     assert(b.corpus(spark).head().getDouble(0).toLong
       == b.doclen(spark).count())
     // an intact artifact keeps resolving without a rebuild
-    TextIndex.evictMemo(key)
+    TextIndex.lifecycle.evictMemo(key)
     assert(TextIndex.ensure(docs, key).dir == b.dir)
   }
 
   test("ann index: ensure detects out-of-lockstep encodings and rebuilds a fresh generation") {
     val key = "lockstep-spec-ann"
     val root = AnnIndex.rootFor(key)
-    AnnIndex.evictMemo(key)
+    AnnIndex.lifecycle.evictMemo(key)
     wipe(root)
     val corpus = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("label"), col("embedding"))
@@ -113,13 +113,122 @@ class ArtifactLifecycleSpec extends SparkSpec {
     // three encodings: duplicate one ivf row file-level
     a.ivf(spark).limit(1)
       .write.mode("append").partitionBy("cell").parquet(s"${a.dir}/ivf")
-    AnnIndex.evictMemo(key)
+    AnnIndex.lifecycle.evictMemo(key)
     val b = AnnIndex.ensure(corpus, key)
     assert(b.dir != a.dir,
       s"a torn artifact must rebuild into a fresh generation: ${b.dir}")
     assert(b.ivf(spark).count() == b.sq8(spark).count())
-    AnnIndex.evictMemo(key)
+    AnnIndex.lifecycle.evictMemo(key)
     assert(AnnIndex.ensure(corpus, key).dir == b.dir)
+  }
+
+  // a hard crash between a table swap's delete and its rename leaves
+  // the table missing with _DONE intact: ensure() must count that as a
+  // tear at once and rebuild into a fresh generation
+  private def missingTableRebuilds(key: String, root: java.nio.file.Path,
+                                   table: String, evict: () => Unit,
+                                   ensure: () => graft.operators.ArtifactGen.Handle): Unit = {
+    evict()
+    wipe(root)
+    val a = ensure()
+    assert(a.dir.endsWith("gen-1"), a.dir)
+    wipe(java.nio.file.Paths.get(a.dir, table))
+    evict()
+    val b = ensure()
+    assert(b.dir.endsWith("gen-2"),
+      s"a missing $table/ must rebuild into a fresh generation: ${b.dir}")
+    // the rebuilt generation is intact: a fresh resolve keeps it
+    evict()
+    assert(ensure().dir == b.dir)
+    evict()
+    wipe(root)
+  }
+
+  test("text index: a missing table rebuilds a fresh generation") {
+    val key = "missing-spec-text"
+    val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
+    missingTableRebuilds(key, TextIndex.rootFor(key), "corpus",
+      () => TextIndex.lifecycle.evictMemo(key),
+      () => TextIndex.ensure(docs, key))
+  }
+
+  test("ann index: a missing table rebuilds a fresh generation") {
+    val key = "missing-spec-ann"
+    val corpus = Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("label"), col("embedding"))
+    missingTableRebuilds(key, AnnIndex.rootFor(key), "sq8",
+      () => AnnIndex.lifecycle.evictMemo(key),
+      () => AnnIndex.ensure(corpus, key))
+  }
+
+  test("dedup index: a missing table rebuilds a fresh generation") {
+    val key = "missing-spec-dedup"
+    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six")).toDF("doc_id", "text")
+    missingTableRebuilds(key, DedupIndex.rootFor(key), "buckets",
+      () => DedupIndex.lifecycle.evictMemo(key),
+      () => DedupIndex.ensure(docs, key))
+  }
+
+  test("dedup index: rebuild publishes a fresh generation; stale reader stays wholly-old") {
+    val key = "lifecycle-spec-dedup"
+    val root = DedupIndex.rootFor(key)
+    DedupIndex.lifecycle.evictMemo(key)
+    wipe(root)
+    val docs1 = Seq((1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six")).toDF("doc_id", "text")
+    val a = DedupIndex.ensure(docs1, key)
+    assert(a.dir.endsWith("gen-1"), a.dir)
+    val counts = (a.fingerprints(spark).count(), a.buckets(spark).count(),
+      a.shingleSets(spark).count())
+
+    DedupIndex.lifecycle.invalidate(a)
+    val docs2 = (1L to 5L)
+      .map(i => (i, s"river stone bridge dawn mountain number $i"))
+      .toDF("doc_id", "text")
+    val b = DedupIndex.ensure(docs2, key)
+    assert(b.dir != a.dir && b.dir.endsWith("gen-2"),
+      s"rebuild must go to a fresh generation: ${a.dir} -> ${b.dir}")
+
+    // the stale reader's generation is untouched: every table whole
+    assert((a.fingerprints(spark).count(), a.buckets(spark).count(),
+      a.shingleSets(spark).count()) == counts)
+    assert(a.fingerprints(spark).count() == 2L)
+    // the new reader is wholly-new
+    assert(b.fingerprints(spark).count() == 5L)
+    assert(b.shingleSets(spark).count() == 5L)
+
+    DedupIndex.lifecycle.evictMemo(key)
+    assert(DedupIndex.ensure(docs2, key).dir == b.dir)
+    wipe(root)
+  }
+
+  test("commit guard: a throwing body removes _DONE, evicts the memo and rethrows") {
+    val key = "commit-guard-spec"
+    val root = DedupIndex.rootFor(key)
+    DedupIndex.lifecycle.evictMemo(key)
+    wipe(root)
+    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six")).toDF("doc_id", "text")
+    val a = DedupIndex.ensure(docs, key)
+    val boom = new RuntimeException("boom")
+    val e = intercept[IllegalStateException] {
+      DedupIndex.lifecycle.commit(a, "spec append") { throw boom }
+    }
+    assert(e.getCause eq boom)
+    assert(e.getMessage == s"partial spec append into ${a.dir} — artifact " +
+      "invalidated (_DONE removed, memo evicted), next ensure() rebuilds")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(a.dir, "_DONE")))
+    // memo evicted: the SAME JVM's next ensure() rebuilds (a memo hit
+    // would hand back the torn gen-1)
+    val b = DedupIndex.ensure(docs, key)
+    assert(b.dir != a.dir && b.dir.endsWith("gen-2"), b.dir)
+    // a body that returns leaves the artifact and memo alone
+    assert(DedupIndex.lifecycle.commit(b, "spec append")(42) == 42)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(b.dir, "_DONE")))
+    assert(DedupIndex.ensure(docs, key) eq b)
+    DedupIndex.lifecycle.evictMemo(key)
+    wipe(root)
   }
 
   test("generation claim is atomic: two racing builders get distinct dirs and a consistent _CURRENT") {

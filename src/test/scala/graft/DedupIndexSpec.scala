@@ -96,7 +96,7 @@ class DedupIndexSpec extends SparkSpec {
     import spark.implicits._
     val key = "dix-lockstep-spec"
     val root = DedupIndex.rootFor(key)
-    DedupIndex.evictMemo(key)
+    DedupIndex.lifecycle.evictMemo(key)
     graft.operators.ArtifactGen.wipe(root)
     val docs = Seq((1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "one two three four five six"))
@@ -106,7 +106,7 @@ class DedupIndexSpec extends SparkSpec {
     // before buckets/shingle_sets: _DONE stays, tables out of lockstep
     Seq(("deadbeef", 999L)).toDF("fingerprint", "keep_id")
       .write.mode("append").parquet(s"${a.dir}/fingerprints")
-    DedupIndex.evictMemo(key)
+    DedupIndex.lifecycle.evictMemo(key)
     val b = DedupIndex.ensure(docs, key)
     assert(b.dir != a.dir,
       s"a torn artifact must rebuild into a fresh generation: ${b.dir}")
@@ -114,7 +114,7 @@ class DedupIndexSpec extends SparkSpec {
     // verify side know the same docs
     assert(b.fingerprints(spark).count() == b.shingleSets(spark).count())
     // an INTACT artifact keeps resolving without a rebuild
-    DedupIndex.evictMemo(key)
+    DedupIndex.lifecycle.evictMemo(key)
     assert(DedupIndex.ensure(docs, key).dir == b.dir)
   }
 }

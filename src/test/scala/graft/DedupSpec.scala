@@ -155,6 +155,17 @@ class DedupSpec extends SparkSpec {
     assert(e.getMessage.contains("did not converge"))
   }
 
+  test("dup clusters refuse pair endpoints that are not docs") {
+    // 4 is an endpoint but not a doc: labels start from docs only, so
+    // clustering would silently split {1, 2, 3} at the stray node
+    val docs = Seq(1L, 2L, 3L).toDF("doc_id")
+    val pairs = Seq((1L, 4L), (3L, 4L), (1L, 2L)).toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.dupClusters(docs, pairs)
+    }
+    assert(e.getMessage.contains("pair endpoints missing"))
+  }
+
   test("dup clusters converge on a long chain within the round bound") {
     // a 12-node path has diameter 11 — min-label propagation still
     // converges (label floods one hop per round) and labels everything
