@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc profiling entry: run named queries (cold + warm) against a
   * scale dir and print wall times; `explain` flag dumps the formatted
@@ -43,13 +42,7 @@ object Prof {
     val jobs = rest.headOption.contains("jobs")
     if (jobs) rest = rest.drop(1)
     val names = rest
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val timer = new JobTimer
     if (jobs) spark.sparkContext.addSparkListener(timer)
     Tables.names.foreach { t =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Sampled recall@k probe for the IVF serving path — the routing
@@ -78,13 +77,7 @@ object RecallProbe {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val q = sys.env.getOrElse("SPARK_GRAFT_RECALL_Q", "64").toInt
     val k = sys.env.getOrElse("SPARK_GRAFT_RECALL_K", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     import spark.implicits._
 
     // the index's own corpus (embeddings + the n4 plants) so ground

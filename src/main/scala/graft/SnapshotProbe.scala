@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Snapshot/restore PARALLELISM probe — the round-11 verdict's task-2
   * done criterion: show repository wall-clock scaling with
   * max-file/threads, not Σ-files. The old implementation streamed
@@ -33,11 +31,7 @@ object SnapshotProbe {
   def main(args: Array[String]): Unit = {
     val nFiles = sys.env.getOrElse("SPARK_GRAFT_SNAP_FILES", "1024").toInt
     val kb = sys.env.getOrElse("SPARK_GRAFT_SNAP_KB", "64").toInt
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val src = java.nio.file.Files.createTempDirectory("graft-snapprobe-src")
     val buf = new Array[Byte](kb << 10)

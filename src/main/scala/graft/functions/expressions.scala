@@ -626,14 +626,10 @@ object expressions {
   def dot_product(a: Column, b: Column): Column =
     GraftShim.toColumn(DotProduct(GraftShim.toExpression(a), GraftShim.toExpression(b)))
 
-  // Column-typed shift amounts: the public functions.shiftleft/right only
-  // accept a literal Int, but SimHash needs per-element shifts inside
-  // higher-order-function lambdas.
-  import org.apache.spark.sql.catalyst.expressions.{ShiftLeft, ShiftRight, ShiftRightUnsigned}
-  def shift_left(c: Column, bits: Column): Column =
-    GraftShim.toColumn(ShiftLeft(GraftShim.toExpression(c), GraftShim.toExpression(bits)))
-  def shift_right(c: Column, bits: Column): Column =
-    GraftShim.toColumn(ShiftRight(GraftShim.toExpression(c), GraftShim.toExpression(bits)))
+  // Column-typed shift amount: the public functions.shiftrightunsigned
+  // only accepts a literal Int, but SimHash banding shifts by the band
+  // index inside a higher-order-function lambda.
+  import org.apache.spark.sql.catalyst.expressions.ShiftRightUnsigned
   def shift_right_unsigned(c: Column, bits: Column): Column =
     GraftShim.toColumn(ShiftRightUnsigned(GraftShim.toExpression(c), GraftShim.toExpression(bits)))
 

@@ -121,15 +121,6 @@ object Dedup {
         array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
   }
 
-  /** D2 MinHash+LSH near-dup pairs: band the signature, bucket-join on
-    * (band index, band hash), verify candidates with exact Jaccard on
-    * the shingle sets. Returns pairs (id_a < id_b) with their Jaccard.
-    *
-    * bands×rows = numHashes; collision prob for similarity s is
-    * 1-(1-s^rows)^bands (the standard S-curve). Defaults target
-    * s ≳ 0.5. The banded self-join shuffles both sides identically, so
-    * Spark's ReuseExchange evaluates the signature plan once.
-    */
   /** (id, band, bucket): the banded-signature LSH index rows for
     * `docs` — the frame a production near-dedup service MAINTAINS as
     * its standing index (new batches append their rows after
@@ -162,21 +153,22 @@ object Dedup {
             v => v.cast("string"))), b))).as(Seq("band", "bucket")))
   }
 
+  /** D2 MinHash+LSH near-dup pairs: band the signature, bucket-join on
+    * (band index, band hash), verify candidates with exact Jaccard on
+    * the shingle sets. Returns pairs (id_a < id_b) with their Jaccard.
+    *
+    * bands×rows = numHashes; collision prob for similarity s is
+    * 1-(1-s^rows)^bands (the standard S-curve). Defaults target
+    * s ≳ 0.5. The banded self-join is a [[Pairs.join]], so the
+    * signature aggregation is evaluated once (reused exchange).
+    */
   def minhashPairs(docs: DataFrame, textCol: String = "text",
                    idCol: String = "doc_id", numHashes: Int = NumHashes,
                    bands: Int = Bands, threshold: Double = 0.5): DataFrame = {
     val buckets = bandBuckets(docs, textCol, idCol, numHashes, bands)
-    val a = buckets.as("a")
-    val b = buckets.as("b")
-    // merge-hinted for the same reason as [[simhashPairs]]'s self-join:
-    // a broadcast plan re-runs the full MinHash signature aggregation
-    // inside the BroadcastExchange (computed twice), while under SMJ
-    // both sides are the identical exchange and stage reuse computes
-    // it once — and the banded frame outgrows any broadcast at scale
-    val cand = a.hint("merge").join(b,
-        col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") &&
-        col("a.id") < col("b.id"))
+    val cand = Pairs.join(buckets.as("a"), buckets.as("b"),
+        Seq("band", "bucket"))
+      .filter(col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
     val sets = withHashedShingleSet(docs, textCol, idCol)
@@ -490,26 +482,16 @@ object Dedup {
         b => graft.functions.expressions
           .shift_right_unsigned(col("sim"), b * 15)
           .bitwiseAND(0x7FFFL))).as(Seq("band", "bucket")))
-    val a = banded.as("a")
-    val b = banded.as("b")
     // Hamming verification is row-local and functionally determined by
     // the pair (one signature per doc), so it commutes with the
     // candidate dedup — verify FIRST, then dedup: the dropDuplicates
     // exchange carries only the pairs that pass (≤ maxHamming of 60
     // bits is selective) and three columns instead of every multi-band
     // collision with both raw signatures (§2.3 shuffle fewer
-    // bytes/rows). The self-join is pinned to sort-merge: a broadcast
-    // plan builds the banded side TWICE (the full explode + 60-vote
-    // signature aggregation re-runs inside the BroadcastExchange — no
-    // reuse across a broadcast/shuffle pair), while under SMJ both
-    // sides are the identical exchange and stage reuse computes the
-    // signatures ONCE; at scale the banded frame outgrows any
-    // broadcast anyway, so this also makes the local plan the scale
-    // plan. Identical result set either way.
-    a.hint("merge").join(b,
-        col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") &&
-        col("a.id") < col("b.id"))
+    // bytes/rows). The banded self-join is a [[Pairs.join]], so the
+    // signatures are computed once (reused exchange).
+    Pairs.join(banded.as("a"), banded.as("b"), Seq("band", "bucket"))
+      .filter(col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         bit_count(col("a.sim").bitwiseXOR(col("b.sim"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -517,11 +499,6 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** D4 exact n-gram Jaccard pairs via inverted index: explode distinct
-    * shingles, self-join on shingle (this is the posting-list join —
-    * bounded by shingle frequency, and skew-resistant by dropping
-    * ultra-common shingles), count shared per pair, Jaccard from set
-    * sizes. SQL-expressible ⇒ serves as its own DuckDB oracle. */
   /** Shared capped posting-bucket candidate machinery of
     * [[jaccardPairs]] and [[containmentPairs]] (one implementation —
     * the two copies the round-13 review found could silently diverge
@@ -544,18 +521,11 @@ object Dedup {
       .withColumn("setsize", size(col("shingles")))
     val posts = sets
       .select(col("id"), col("setsize"), explode(col("shingles")).as("sh"))
-    // pin the posting shuffle to the CONFIGURED shuffle parallelism:
-    // the exchange is byte-light (24-byte posting rows) but the stage
-    // on its reduce side does the quadratic in-bucket pair expansion —
-    // AQE's byte-based coalescing serializes exactly that compute
-    // (measured 1–3 tasks at sf0.1). An explicit numPartitions is
-    // AQE-exempt and the groupBy reuses the partitioning (same key,
-    // same count — no extra exchange, §2.4); the value is the
-    // session's shuffle-partition setting, the cluster-sized knob,
-    // never a local constant.
-    val nShuffle = sets.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val buckets = posts.repartition(nShuffle, col("sh")).groupBy(col("sh"))
+    // the posting exchange is byte-light (24-byte posting rows) but its
+    // reduce side does the quadratic in-bucket pair expansion, so it is
+    // pinned by [[Pairs.wide]] (measured 1–3 tasks at sf0.1 without);
+    // the groupBy reuses the partitioning — no extra exchange, §2.4
+    val buckets = Pairs.wide(posts, Seq("sh")).groupBy(col("sh"))
       .agg(graft.functions.aggregates
         .capped_collect_postings(col("id"), col("setsize"), maxShingleFreq)
         .as("docs"))
@@ -572,6 +542,11 @@ object Dedup {
       .agg(count(lit(1)).as("inter"))
   }
 
+  /** D4 exact n-gram Jaccard pairs via inverted index: explode distinct
+    * shingles, self-join on shingle (this is the posting-list join —
+    * bounded by shingle frequency, and skew-resistant by dropping
+    * ultra-common shingles), count shared per pair, Jaccard from set
+    * sizes. SQL-expressible ⇒ serves as its own DuckDB oracle. */
   def jaccardPairs(docs: DataFrame, textCol: String = "text",
                    idCol: String = "doc_id", n: Int = 3,
                    threshold: Double = 0.5,

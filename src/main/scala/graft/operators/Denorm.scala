@@ -65,24 +65,19 @@ object Denorm {
     case None => df
   }
 
+  /** The child aggregations' shuffle, pinned by [[Pairs.wide]]: the
+    * exchange is byte-light after compression but its reduce side does
+    * the expensive per-group work (struct building over strings,
+    * in-group sort_array), so AQE's byte-based coalescing starves it —
+    * and those few long tasks were the wander amplifier (any GC pause
+    * on one of them extends the critical path directly). The groupBy on
+    * the same key reuses the partitioning: still exactly ONE fact-table
+    * shuffle. */
+  private def byOrderKey(df: DataFrame): DataFrame =
+    Pairs.wide(df, Seq("l_orderkey"))
+
   /** Array-of-structs child collection: lineitems per order, the analog
     * of the reference's links/annotations child arrays. */
-  /** Pin the child aggregation's shuffle to the CONFIGURED shuffle
-    * parallelism (guide §2.5): the exchange is byte-light after
-    * compression but its reduce side does the expensive per-group work
-    * (struct building over strings, in-group sort_array), so AQE's
-    * byte-based partition coalescing starves it — measured at sf0.1
-    * the whole collect_list stage ran on 3 of 32 cores (2.4 s of a
-    * 3.7 s query) and those 3 long tasks were the wander amplifier
-    * (any GC pause or scheduling hiccup on one of them extends the
-    * critical path directly). An explicit numPartitions is AQE-exempt
-    * and the groupBy on the same key reuses the partitioning — still
-    * exactly ONE fact-table shuffle; the value is the session's
-    * shuffle-partition conf, the cluster-sized knob. */
-  private def byOrderKey(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt, col("l_orderkey"))
-
   def itemsPerOrder(spark: SparkSession, dir: String,
                     keep: Option[DataFrame] = None): DataFrame =
     byOrderKey(pruneTo(Tables.lineitem(spark, dir), col("l_orderkey"), keep))

@@ -131,20 +131,10 @@ object EventOps {
       col("session_idx").as("i1"), col("s").as("s1"), col("e").as("e1"))
     val rhs = banded.select(col("hb"), col("user_id").as("u2"),
       col("session_idx").as("i2"), col("s").as("s2"), col("e").as("e2"))
-    // pin the banded self-join's parallelism (the cosinePairsBlocked
-    // discipline): the bucket shuffle is byte-light but each bucket
-    // carries quadratic candidate work, so AQE's byte-based coalescing
-    // serializes exactly the expensive stage (measured: the pair stage
-    // ran on 2 of 32 cores at sf0.1). Explicit numPartitions is
-    // AQE-exempt, both sides come out hash-partitioned on the join key
-    // (no extra exchange — and the identical exchanges make the
-    // planner reuse ONE evaluation of the session window instead of
-    // re-running it inside a broadcast build), and the value is the
-    // session's shuffle-partition conf, the cluster-sized knob.
-    val nShuffle = events.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val pairs = lhs.repartition(nShuffle, col("hb"))
-      .join(rhs.repartition(nShuffle, col("hb")), Seq("hb"))
+    // the two sides differ only in column names, so the banded
+    // self-join's exchanges are identical and the session window is
+    // evaluated once (see [[Pairs.join]])
+    val pairs = Pairs.join(lhs, rhs, Seq("hb"))
       .filter(col("u1") < col("u2") &&
         col("s1") <= col("e2") && col("s2") <= col("e1"))
       .select(col("u1"), col("i1"), col("u2"), col("i2"),

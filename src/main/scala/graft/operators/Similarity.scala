@@ -1129,26 +1129,21 @@ object Similarity {
   def cosinePairsBlocked(emb: DataFrame, threshold: Double,
                          blocks: Int = 8): DataFrame = {
     val tiles = lit((0 until blocks).toArray)
+    // the block is an int like the exploded tile coordinate: with a
+    // bigint/int key pair the planner casts the join keys and shuffles
+    // both sides again on the session width, discarding the tile pin
     val e = withNorm(emb)
       .select(col("vec_id"), col("v"), col("nrm"),
-        pmod(col("vec_id"), lit(blocks)).as("blk"))
+        pmod(col("vec_id"), lit(blocks)).cast("int").as("blk"))
     // a-row of block i participates in tiles (i, *); b-row of block j
     // in tiles (*, j); pair (x, y) meets in exactly tile (blk x, blk y)
     val a = e.select(col("vec_id").as("id_a"), col("v").as("va"),
       col("nrm").as("na"), col("blk").as("ti"), explode(tiles).as("tj"))
     val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"),
       col("nrm").as("nb"), explode(tiles).as("ti"), col("blk").as("tj"))
-    // pin the tile join's parallelism to the tile count: the shuffle is
-    // byte-LIGHT but each tile carries quadratic dot-product work, so
-    // AQE's byte-based partition coalescing is exactly wrong here —
-    // measured at sf0.1 it fused the whole n²/2 compute into ONE task.
-    // An explicit numPartitions is AQE-exempt, both sides come out
-    // hash-partitioned on the join keys (no extra exchange for the
-    // join), and the tile key is the natural unit of work at every
-    // scale — blocks² tasks regardless of byte estimates.
-    a.repartition(blocks * blocks, col("ti"), col("tj"))
-      .join(b.repartition(blocks * blocks, col("ti"), col("tj")),
-        Seq("ti", "tj"))
+    // the tile is the unit of work at every scale: the join runs on
+    // blocks² partitions, one per tile, whatever the session width
+    Pairs.join(a, b, Seq("ti", "tj"), blocks * blocks)
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6)
@@ -1166,10 +1161,8 @@ object Similarity {
     val planes = hyperplanes(dim, nPlanes, seed)
     val b0 = withNorm(emb).select(col("vec_id"), col("v"), col("nrm"),
       lshBucket(col("v"), planes).as("bucket"))
-    val l = b0.as("l")
-    val r = b0.as("r")
-    l.join(r, col("l.bucket") === col("r.bucket") &&
-        col("l.vec_id") < col("r.vec_id"))
+    Pairs.join(b0.as("l"), b0.as("r"), Seq("bucket"))
+      .filter(col("l.vec_id") < col("r.vec_id"))
       .select(col("l.vec_id").as("id_a"), col("r.vec_id").as("id_b"),
         round(dot(col("l.v"), col("r.v")) / (col("l.nrm") * col("r.nrm")), 6)
           .as("cos_sim"))
@@ -1177,29 +1170,6 @@ object Similarity {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** N5: int8 scalar quantization of an embedding column (the FAISS
-    * SQ8 shape) — each vector rescales to its own max-magnitude so
-    * codes use the full [-127,127] range; storage drops 4× and
-    * distance kernels run on bytes. Row-local projection: quantization
-    * is scan-side at any scale.
-    *
-    * Every arithmetic step is plain IEEE-double ops (`floor(x+0.5)`,
-    * never `round`) so the DuckDB oracle replays it bit-for-bit —
-    * half-way cases round identically by construction, where the two
-    * engines' `round()` builtins disagree (HALF_UP vs half-even).
-    * The emitted `ok` column is the reconstruction contract: max
-    * |xᵢ − qᵢ·scale| ≤ scale/2 — the bound scalar quantization
-    * promises; a broken scale or rounding step violates it. */
-  /** N6: per-label centroids — the class means a clustering /
-    * classification / retrieval-eval pipeline reads off an embedding
-    * corpus. Floating-point addition is not associative, so a naive
-    * `avg` over partitions is not bitwise-reproducible across cluster
-    * sizes or runs; here each element first quantizes to integer
-    * micro-units (row-local, deterministic) and the aggregation is an
-    * exact BIGINT sum — the distributed mean becomes order-independent
-    * by construction (the fixed-point reproducibility pattern). Two
-    * shuffles: (label, dim) partial sums, then per-label array
-    * assembly; dims explode 64× but carry 3 longs each. */
   /** N8 training: product-quantization codebooks (Jégou et al. 2011,
     * "Product quantization for nearest neighbor search") — the vector
     * splits into `m` subvectors and each subspace gets its own
@@ -1665,9 +1635,8 @@ object Similarity {
                clusterCol: String = "label"): DataFrame = {
     val e = withNorm(emb)
       .select(col("vec_id"), col(clusterCol).as("cl"), col("v"), col("nrm"))
-    val l = e.as("l"); val r = e.as("r")
-    val dupOf = l.join(r, col("l.cl") === col("r.cl") &&
-        col("l.vec_id") > col("r.vec_id"))
+    val dupOf = Pairs.join(e.as("l"), e.as("r"), Seq("cl"))
+      .filter(col("l.vec_id") > col("r.vec_id"))
       .select(col("l.vec_id").as("vec_id"),
         col("r.vec_id").as("nbr"),
         round(dot(col("l.v"), col("r.v")) / (col("l.nrm") * col("r.nrm")), 6)
@@ -1681,6 +1650,16 @@ object Similarity {
         coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
   }
 
+  /** N6: per-label centroids — the class means a clustering /
+    * classification / retrieval-eval pipeline reads off an embedding
+    * corpus. Floating-point addition is not associative, so a naive
+    * `avg` over partitions is not bitwise-reproducible across cluster
+    * sizes or runs; here each element first quantizes to integer
+    * micro-units (row-local, deterministic) and the aggregation is an
+    * exact BIGINT sum — the distributed mean becomes order-independent
+    * by construction (the fixed-point reproducibility pattern). Two
+    * shuffles: (label, dim) partial sums, then per-label array
+    * assembly; dims explode 64× but carry 3 longs each. */
   def labelCentroids(emb: DataFrame): DataFrame = {
     val u = emb
       .select(col("label"),
@@ -1845,6 +1824,19 @@ object Similarity {
           x => x).as("ranked_desc"))
   }
 
+  /** N5: int8 scalar quantization of an embedding column (the FAISS
+    * SQ8 shape) — each vector rescales to its own max-magnitude so
+    * codes use the full [-127,127] range; storage drops 4× and
+    * distance kernels run on bytes. Row-local projection: quantization
+    * is scan-side at any scale.
+    *
+    * Every arithmetic step is plain IEEE-double ops (`floor(x+0.5)`,
+    * never `round`) so the DuckDB oracle replays it bit-for-bit —
+    * half-way cases round identically by construction, where the two
+    * engines' `round()` builtins disagree (HALF_UP vs half-even).
+    * The emitted `ok` column is the reconstruction contract: max
+    * |xᵢ − qᵢ·scale| ≤ scale/2 — the bound scalar quantization
+    * promises; a broken scale or rounding step violates it. */
   def quantizeInt8(emb: DataFrame): DataFrame = {
     // amax and the codes each materialize behind a projection boundary
     // (referenced several times downstream, incl. inside lambdas), so
