@@ -25,25 +25,27 @@ object Pairs {
     * shuffle parallelism — the cluster-sized knob, never a local
     * constant. */
   def wide(df: DataFrame, keys: Seq[String]): DataFrame =
-    wide(df, keys, df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt)
+    df.repartition(width(df), keys.map(col): _*)
 
-  /** [[wide]] at an explicit partition count, for a stage whose unit of
-    * work is not the cluster width (cosinePairsBlocked's tiles). */
-  def wide(df: DataFrame, keys: Seq[String], n: Int): DataFrame =
-    df.repartition(n, keys.map(col): _*)
-
-  /** Equi-join `l` and `r` on the same-named `keys` (a USING join), both
-    * sides pinned by [[wide]] and the join held to sort-merge. A
-    * self-join passes the same frame twice (aliased, to tell the sides
-    * apart): both sides are then the identical exchange and exchange
-    * reuse evaluates the keyed side ONCE, where a broadcast plan re-runs
-    * it inside the BroadcastExchange and lets one side outgrow memory
-    * at scale. */
+  /** Equi-join `l` and `r` on the same-named `keys` (a USING join) at
+    * [[wide]]'s width. */
   def join(l: DataFrame, r: DataFrame, keys: Seq[String]): DataFrame =
-    wide(l, keys).hint("merge").join(wide(r, keys), keys)
+    join(l, r, keys, width(l))
 
-  /** [[join]] at `n` partitions. */
+  /** Equi-join `l` and `r` on `keys` with both sides hash-partitioned
+    * into `n` partitions and the join held to sort-merge. `n` is the
+    * unit of work when it is not the cluster width (cosinePairsBlocked's
+    * tiles). A self-join passes the same frame twice (aliased, to tell
+    * the sides apart): both sides are then the identical exchange and
+    * exchange reuse evaluates the keyed side ONCE, where a broadcast
+    * plan re-runs it inside the BroadcastExchange and lets one side
+    * outgrow memory at scale. */
   def join(l: DataFrame, r: DataFrame, keys: Seq[String], n: Int): DataFrame =
-    wide(l, keys, n).hint("merge").join(wide(r, keys, n), keys)
+    l.repartition(n, keys.map(col): _*).hint("merge")
+      .join(r.repartition(n, keys.map(col): _*), keys)
+
+  /** The session's shuffle parallelism — the only read of
+    * `spark.sql.shuffle.partitions` under `operators/`. */
+  private def width(df: DataFrame): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
 }
